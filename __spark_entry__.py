@@ -3,7 +3,7 @@
 ``entry(spark)`` — flagship extraction pipeline on sf0.001.
 ``queries()`` / ``oracle_sql()`` — one entry per implemented operator
 family (SURVEY.md §2 / §2.10), cross-checked against DuckDB at sf0.01:
-177 queries, ALL with exact SQL oracles (incl. the Structured
+every query has an exact SQL oracle (incl. the Structured
 Streaming jobs, PDF position/margin geometry, the full curation
 family, the dedup/ANN family via planted closed forms, and the
 crawl/link-graph/sketch/training-transform tiers).

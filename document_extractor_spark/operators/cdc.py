@@ -20,7 +20,7 @@ Scale shape — the text NEVER fans out:
 3. downstream overlap joins run on 16-byte hashes.
 
 Expected chunk length ≈ ``divisor`` chars (boundary probability 1/D
-per position). md5 (not xxhash64) for the DuckDB twin, as everywhere.
+per position). Hashes follow ``functions/hashing.py``.
 No min/max chunk clamps (the classic refinement): boundaries may
 cluster — acceptable for overlap STATISTICS; add clamps before using
 chunks as storage units.
@@ -31,8 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: hex chars of the gram hash used for the boundary draw — 48 bits
-_HEX = 12
+from ..functions.hashing import HEX48, md5_bucket
 
 
 def cdc_chunks(df: DataFrame, id_col: str = "doc_id",
@@ -51,9 +50,7 @@ def cdc_chunks(df: DataFrame, id_col: str = "doc_id",
 
     def is_cut(i):
         gram_h = F.md5(F.substring(t, i, F.lit(w)))
-        return F.pmod(
-            F.conv(F.substring(gram_h, 1, _HEX), 16, 10).cast("bigint"),
-            F.lit(divisor)) == 0
+        return md5_bucket(gram_h, F.lit(divisor), HEX48) == 0
 
     positions = F.when(
         L >= w,

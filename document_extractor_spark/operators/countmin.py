@@ -27,20 +27,21 @@ Scale shape — the classic two-level sketch:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: hex chars of md5 used per bucket draw — 48 bits, exact in a double
-#: and in BIGINT arithmetic in both engines
-_HEX = 12
+from ..functions.hashing import HEX48, md5_bucket, seeded_md5
 
 
-def _bucket(col, row_i: int, width: int):
-    """Row-``row_i`` bucket of ``col``: md5 of the row-salted value,
-    first 48 bits mod width — byte-identical in DuckDB."""
-    h = F.md5(F.concat(F.lit(f"{row_i}:"), col))
-    return F.pmod(F.conv(F.substring(h, 1, _HEX), 16, 10).cast("bigint"),
-                  F.lit(width))
+def _cells(col: Column, depth: int, width: int) -> Column:
+    """``depth`` (row, bucket) structs of ``col``: row i's bucket is the
+    first 48 bits of md5(``"i:"`` ‖ value) mod width."""
+    return F.array(*[
+        F.struct(F.lit(i).alias("row"),
+                 md5_bucket(seeded_md5(f"{i}:", col), F.lit(width), HEX48)
+                 .alias("bucket"))
+        for i in range(depth)
+    ])
 
 
 def count_min_build(df: DataFrame, value_col: str, depth: int = 4,
@@ -53,14 +54,8 @@ def count_min_build(df: DataFrame, value_col: str, depth: int = 4,
         raise ValueError("need depth >= 1 and width >= 2")
     v = df.select(F.col(value_col).cast("string").alias("_v")) \
           .where(F.col("_v").isNotNull())
-    cells = v.withColumn(
-        "_cells",
-        F.array(*[
-            F.struct(F.lit(i).alias("row"),
-                     _bucket(F.col("_v"), i, width).alias("bucket"))
-            for i in range(depth)
-        ]),
-    ).select(F.explode("_cells").alias("_c"))
+    cells = v.withColumn("_cells", _cells(F.col("_v"), depth, width)) \
+        .select(F.explode("_cells").alias("_c"))
     return (
         cells.groupBy(F.col("_c.row").alias("row"),
                       F.col("_c.bucket").alias("bucket"))
@@ -77,14 +72,8 @@ def count_min_estimate(sketch: DataFrame, keys: DataFrame, key_col: str,
     size."""
     fan = keys.select(F.col(key_col).cast("string").alias("key")) \
               .where(F.col("key").isNotNull())
-    fan = fan.withColumn(
-        "_cells",
-        F.array(*[
-            F.struct(F.lit(i).alias("row"),
-                     _bucket(F.col("key"), i, width).alias("bucket"))
-            for i in range(depth)
-        ]),
-    ).select("key", F.explode("_cells").alias("_c"))
+    fan = fan.withColumn("_cells", _cells(F.col("key"), depth, width)) \
+        .select("key", F.explode("_cells").alias("_c"))
     joined = fan.join(
         F.broadcast(sketch),
         (fan["_c.row"] == sketch["row"])

@@ -19,6 +19,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import (HEX60, md5_bucket, md5_int, mix_key,
+                                 mix_threshold_col, mix_threshold_hex,
+                                 seeded_md5)
 from ..functions.text import shingles_df, token_count
 
 # ---------------------------------------------------------------------------
@@ -153,17 +156,6 @@ def redact_pii(df: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------------------
 
 
-def mix_threshold_hex(weight: float) -> str:
-    """First-8-hex-chars md5 threshold for a keep fraction. Hex strings
-    of equal length compare lexicographically as numbers, so the filter
-    is a plain string comparison — identical in Spark and DuckDB
-    (md5 hex output matches engine-for-engine). weight ≥ 1 → 'g', which
-    every hex string sorts below (keep all)."""
-    if weight >= 1.0:
-        return "g"
-    return format(max(int(weight * 16**8), 0), "08x")
-
-
 def sample_mix(docs: DataFrame, weights: dict, key_col: str = "doc_id",
                source_col: str = "source", seed: str = "mix1") -> DataFrame:
     """Source-weighted deterministic subsample: keep a row iff the first
@@ -171,12 +163,9 @@ def sample_mix(docs: DataFrame, weights: dict, key_col: str = "doc_id",
     threshold. Sources absent from ``weights`` are dropped (weight 0).
 
     Unlike ``df.sampleBy``, the decision is a pure function of
-    (seed, key) — stable under repartitioning, retries, and engine
-    (the DuckDB oracle evaluates the same md5 comparison), which is what
-    a reproducible training-data mix requires. Narrow filter; no
-    shuffle."""
-    h = F.substring(
-        F.md5(F.concat(F.lit(seed), F.col(key_col).cast("string"))), 1, 8)
+    (seed, key) — stable under repartitioning, retries, and engine —
+    as a reproducible training-data mix requires. Narrow filter."""
+    h = mix_key(seed, key_col)
     cond = F.lit(False)
     for src, w in weights.items():
         cond = cond | (
@@ -195,23 +184,12 @@ def sample_mix_table(docs: DataFrame, weights: DataFrame,
     plan-bloat for thousands; this shape is constant-size regardless.
     Sources absent from the weights table are dropped (inner join =
     weight 0), matching the dict variant's contract."""
-    # greatest(…, 0): a negative weight must clamp to keep-nothing like
-    # mix_threshold_hex's max(int(…), 0) — unclamped, floor of a
-    # negative goes through conv's 64-bit unsigned wrap and lpad
-    # truncation to 'ffffffff', silently keeping ~everything
-    thr = F.when(F.col(weight_col) >= 1.0, F.lit("g")).otherwise(
-        F.lpad(F.conv(
-            F.greatest(
-                F.floor(F.col(weight_col) * F.lit(float(16**8))),
-                F.lit(0)).cast("string"),
-            10, 16), 8, "0"))
     w = weights.select(F.col(source_col).alias("_mix_src"),
-                       F.lower(thr).alias("_mix_thr"))
-    h = F.substring(
-        F.md5(F.concat(F.lit(seed), F.col(key_col).cast("string"))), 1, 8)
+                       mix_threshold_col(F.col(weight_col))
+                       .alias("_mix_thr"))
     return (
         docs.join(F.broadcast(w), docs[source_col] == F.col("_mix_src"))
-        .filter(h < F.col("_mix_thr"))
+        .filter(mix_key(seed, key_col) < F.col("_mix_thr"))
         .drop("_mix_src", "_mix_thr")
     )
 
@@ -254,12 +232,8 @@ def weighted_sample(docs: DataFrame, k: int, weight_col: str,
                     F.col(weight_col).cast("double").alias("_es_w"))
         .where(F.col("_es_w") > 0)
     )
-    u = (
-        (F.conv(F.substring(
-            F.md5(F.concat(F.lit(seed),
-                           F.col("_es_key").cast("string"))), 1, 15),
-            16, 10).cast("bigint") + F.lit(1)).cast("double")
-        / F.lit(float(2 ** 60)))
+    u = ((md5_int(seeded_md5(seed, "_es_key"), HEX60) + F.lit(1))
+         .cast("double") / F.lit(float(16 ** HEX60)))
     picked = (
         narrow.withColumn("_es_o", F.log(u) / F.col("_es_w"))
         .orderBy(F.col("_es_o").desc(), F.col("_es_key").asc())
@@ -588,10 +562,8 @@ def shuffle_shards(docs: DataFrame, n_shards: int = 1024,
     emits one reproducibly-ordered file set per shard."""
     from pyspark.sql import Window
 
-    h = F.md5(F.concat(F.lit(seed), F.col(key_col).cast("string")))
-    shard = F.pmod(
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("long"),
-        F.lit(n_shards)).cast("int")
+    h = seeded_md5(seed, key_col)
+    shard = md5_bucket(h, F.lit(n_shards)).cast("int")
     w = Window.partitionBy("shard").orderBy("_shuf_h", key_col)
     rn = F.row_number().over(w) - 1
     # woven into the live shard_pos expression (guard.isNull() is TRUE
@@ -778,10 +750,9 @@ def stratified_sample(docs: DataFrame, group_col: str, k: int,
     hash (ties impossible: the hash input embeds the unique key). At
     100 TB the caveat is a mega-group serializing its own sort — the
     same bound as every per-host window in this repo; k rows ship on."""
-    h = F.md5(F.concat(F.lit(seed), F.col(key_col).cast("string")))
     from pyspark.sql import Window
 
-    w = Window.partitionBy(group_col).orderBy(h.asc())
+    w = Window.partitionBy(group_col).orderBy(seeded_md5(seed, key_col).asc())
     return (
         docs.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
@@ -796,11 +767,9 @@ def assign_splits(docs: DataFrame, splits: dict | None = None,
     needs one, and it must be a PURE FUNCTION of (seed, key): stable
     under repartitioning, retries, engine, and incremental re-runs (a
     document added next month cannot move any existing document across
-    splits, which ``randomSplit`` cannot promise). Mechanism: the
-    first 8 md5 hex chars of ``seed‖key`` land in [0, 16^8); cumulative
-    fraction thresholds — the ``mix_threshold_hex`` convention, plain
-    hex-string comparisons identical in Spark and DuckDB — carve the
-    range into one bucket per split, in the dict's insertion order.
+    splits, which ``randomSplit`` cannot promise). Mechanism: cumulative
+    ``mix_threshold_hex`` thresholds over ``mix_key(seed, key)`` carve
+    the hash range into one bucket per split, in the dict's order.
 
     ``splits`` maps name → fraction; fractions must sum to ≤ 1 (a
     shortfall leaves a holdout residue assigned NULL — explicitly
@@ -815,8 +784,7 @@ def assign_splits(docs: DataFrame, splits: dict | None = None,
         raise ValueError(f"negative split fraction: {splits}")
     if sum(splits.values()) > 1.0 + 1e-9:
         raise ValueError(f"split fractions sum past 1: {splits}")
-    h = F.substring(
-        F.md5(F.concat(F.lit(seed), F.col(key_col).cast("string"))), 1, 8)
+    h = mix_key(seed, key_col)
     expr = F.lit(None).cast("string")
     cum = 0.0
     bounds = []

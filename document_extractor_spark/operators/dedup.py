@@ -20,7 +20,7 @@ Python nodes at all — stricter than the Arrow-only rule).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import content_hash, shingles_df
@@ -44,6 +44,15 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
     )
 
 
+def _best_first(score: str, id_col: str) -> Column:
+    """``min_by`` key keeping the member with the max ``score``, min id
+    on ties, a NULL score (no quality evidence) after every scored one.
+    Negates the numeric score, never the id: ids may be strings (urls),
+    and -F.col(id) throws under ANSI mode / NULLs without it."""
+    return F.struct(F.col(score).isNull().alias("_unscored"),
+                    (-F.col(score)).alias("_ns"), F.col(id_col))
+
+
 def drop_exact_duplicates(df: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text",
                           keep_by: str = None) -> DataFrame:
@@ -52,10 +61,11 @@ def drop_exact_duplicates(df: DataFrame, id_col: str = "doc_id",
     (hash, id) instead, which AQE turns into a shuffled hash join.
 
     ``keep_by``: optional NUMERIC column name — the survivor is the row
-    MAXIMIZING it (min id breaks ties) instead of plain min id. This is
-    quality-aware canonical selection: exact clones usually differ in
-    provenance (fetch date, source tier, extraction quality score), and
-    a production pipeline keeps the best copy, not the smallest id.
+    MAXIMIZING it (min id breaks ties, NULL scores rank last) instead of
+    plain min id. This is quality-aware canonical selection: exact clones
+    usually differ in provenance (fetch date, source tier, extraction
+    quality score), and a production pipeline keeps the best copy, not
+    the smallest id.
     Same plan either way — ``min_by`` is one more map-side partial
     aggregate on the same single shuffle."""
     keyed = df.withColumn("content_hash", content_hash(text_col))
@@ -64,17 +74,9 @@ def drop_exact_duplicates(df: DataFrame, id_col: str = "doc_id",
             F.col("content_hash"), F.col("keep_id").alias(id_col)
         )
     else:
-        # min of (-score, id): max score, then MIN id — negating the
-        # score, never the id. Ids are arbitrary orderable types (urls,
-        # uuids); -F.col(id) on a string id throws under ANSI mode and
-        # silently NULLs (arbitrary survivor) without it. The score is
-        # numeric by contract, so its negation is always well-typed.
         survivors = keyed.groupBy("content_hash").agg(
-            F.min_by(
-                F.col(id_col),
-                F.struct((-F.col(keep_by)).alias("_ns"), F.col(id_col)),
-            ).alias(id_col)
-        )
+            F.min_by(F.col(id_col), _best_first(keep_by, id_col))
+            .alias(id_col))
     return keyed.join(survivors, ["content_hash", id_col], "left_semi") \
         .drop("content_hash")
 
@@ -181,14 +183,31 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text", n: int = 3,
                        k: int = 32, _pre_shingled: bool = False) -> DataFrame:
     """k-permutation MinHash over n-gram shingles, entirely JVM-side:
-    sig[i] = min over shingles of xxhash64(i, shingle)."""
+    sig[i] = min over shingles of xxhash64(i, shingle). A doc with no
+    token (NULL, empty or blank text) gets no row: all such docs would
+    share one signature, a hot bucket in every LSH band and index probe.
+    """
     sh = (df.select(F.col(id_col), F.col("sh")) if _pre_shingled
           else shingles_df(df, text_col, n).select(F.col(id_col), "sh"))
+    sh = sh.where(F.exists("sh", lambda s: s.rlike(r"\S")))
+    # one lambda parameter: Spark binds two as (element, index); the
+    # lambda runs inside F.transform at once, so it sees the current i
     sig = F.array(*[
-        F.array_min(F.transform("sh", lambda s, i=i: F.xxhash64(F.lit(i), s)))
+        F.array_min(F.transform("sh", lambda s: F.xxhash64(F.lit(i), s)))
         for i in range(k)
     ])
     return sh.select(F.col(id_col), sig.alias("sig"))
+
+
+def _bands(k: int, bands: int) -> Column:
+    """``(band, band_hash)`` rows of a ``sig`` column: band b hashes
+    components ``[b·r, (b+1)·r)``, r = k / bands, salted by b."""
+    r = k // bands
+    return F.posexplode(F.array(*[
+        F.xxhash64(*[F.element_at("sig", b * r + j + 1) for j in range(r)],
+                   F.lit(b))
+        for b in range(bands)
+    ])).alias("band", "band_hash")
 
 
 def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
@@ -198,19 +217,9 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     """LSH banding: split the k-sig into ``bands`` rows of r = k/bands,
     hash each band, bucket-join. Returns distinct candidate (id_a, id_b).
     ``_pre_shingled``: df already carries the ``sh`` shingle column."""
-    r = k // bands
     sigs = minhash_signatures(df, id_col, text_col, n, k,
                               _pre_shingled=_pre_shingled)
-    banded = sigs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            F.array(*[
-                F.xxhash64(*[F.element_at("sig", b * r + j + 1)
-                             for j in range(r)], F.lit(b))
-                for b in range(bands)
-            ])
-        ).alias("band", "band_hash"),
-    )
+    banded = sigs.select(F.col(id_col).alias("id"), _bands(k, bands))
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -437,7 +446,8 @@ def drop_near_duplicates(df: DataFrame, id_col: str = "doc_id",
     connected components → keep one doc per cluster.
 
     ``keep_by``: optional NUMERIC column — the survivor is the cluster
-    member MAXIMIZING it (min id breaks ties) instead of the min-id
+    member MAXIMIZING it (min id breaks ties; a member with a NULL
+    score never beats a scored one) instead of the min-id
     member, mirroring ``drop_exact_duplicates``' quality-aware rule:
     near-dup families are re-renders of the same content, and a
     production pipeline keeps the cleanest extraction, not the
@@ -457,16 +467,12 @@ def drop_near_duplicates(df: DataFrame, id_col: str = "doc_id",
         victims = clusters.filter(
             F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     else:
-        # min of (-score, id): max score, ties to min id — negating
-        # the score, never the id (the drop_exact_duplicates rule)
         scored = clusters.join(
             df.select(F.col(id_col).alias("doc_id"), F.col(keep_by)),
             "doc_id")
         survivors = scored.groupBy("cluster_id").agg(
-            F.min_by(
-                F.col("doc_id"),
-                F.struct((-F.col(keep_by)).alias("_ns"),
-                         F.col("doc_id"))).alias("_keep"))
+            F.min_by(F.col("doc_id"), _best_first(keep_by, "doc_id"))
+            .alias("_keep"))
         victims = (scored.join(survivors, "cluster_id")
                    .filter(F.col("doc_id") != F.col("_keep"))
                    .select("doc_id"))
@@ -892,15 +898,8 @@ def minhash_index(df: DataFrame, id_col: str = "doc_id",
     signature is the documented precision trade (estimator std ≈
     sqrt(J(1-J)/k), ~0.07 at J=0.8, k=32)."""
     sigs = minhash_signatures(df, id_col, text_col, n, k)
-    r = k // bands
-    return sigs.select(
-        F.col(id_col).alias("id"), "sig",
-        F.posexplode(F.array(*[
-            F.xxhash64(*[F.element_at("sig", b * r + j + 1)
-                         for j in range(r)], F.lit(b))
-            for b in range(bands)
-        ])).alias("band", "band_hash"),
-    ).select("band", "band_hash", "id", "sig")
+    return sigs.select(F.col(id_col).alias("id"), "sig", _bands(k, bands)) \
+        .select("band", "band_hash", "id", "sig")
 
 
 def ingest_near_dups(new_docs: DataFrame, index: DataFrame,

@@ -10,8 +10,8 @@ Method (the paper's estimator, deterministic here):
 
 * Features: unigrams + bigrams of lowercased whitespace tokens, hashed
   into ``n_buckets`` buckets (hashing trick — the paper's 10k buckets
-  default scales to any vocabulary; md5-based bucket so the DuckDB twin
-  hashes identically).
+  default scales to any vocabulary; the md5 bucket of
+  ``functions/hashing.py``).
 * Two bag-of-buckets multinomials with Laplace smoothing: ``p`` fit on
   the target corpus, ``q`` on the raw corpus.  Per-bucket log ratio
   ``λ_b = ln((t_b+1)/(T+B)) − ln((r_b+1)/(R+B))`` — computed as ONE
@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_bucket, seeded_md5
 from ..functions.text import tokens
 
 #: fixed-point scale for per-bucket log ratios (nano-nats), lm.py NANO.
@@ -84,10 +85,7 @@ def _bucket_occurrences(df: DataFrame, id_col: str, text_col: str,
             ),
         ),
     ).drop("_tk")
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("_f")), 1, 8), 16, 10).cast("long"),
-        F.lit(n_buckets),
-    ).alias("bucket")
+    bucket = md5_bucket(F.md5("_f"), F.lit(n_buckets)).alias("bucket")
     return (
         d.select(F.col(id_col), F.explode_outer("_fs").alias("_f"))
         .where(F.col("_f").isNotNull())
@@ -176,7 +174,7 @@ def dsir_select(docs: DataFrame, target: DataFrame, k: int,
         raise ValueError(f"k must be >= 1, got {k}")
     s = dsir_scores(docs, target, id_col=id_col, text_col=text_col,
                     n_buckets=n_buckets)
-    tie = F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string")))
+    tie = seeded_md5(seed, id_col)
     return (
         s.orderBy(F.col("log_w_nano").desc_nulls_last(), tie)
         .limit(k)

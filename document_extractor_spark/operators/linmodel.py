@@ -21,27 +21,25 @@ documents the scoring pass costs exactly one scan. Training IS distributed (a bu
 the final ≤``dim``-row count table — model parameters, not data —
 comes to the driver, the PageRank-counter discipline.
 
-Bucket function (identical in Spark / DuckDB / Python, the HLL
-``conv``-bridge pattern): ``int(md5(feature)[:8hex], 16) % dim``.
+Bucket function (identical in Spark / DuckDB / Python):
+``int(md5(feature)[:8hex], 16) % dim`` — ``functions.hashing.md5_bucket``
+and its Python twin ``bucket_of``.
 """
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from document_extractor_spark.functions.hashing import (  # noqa: F401
+    HEX32, bucket_of, md5_bucket)  # bucket_of: re-exported Python twin
 from document_extractor_spark.functions.text import tokens
 
 #: a weight vector is model metadata inlined into the plan, not data;
 #: bigger models go through a broadcast-join seam, not this literal
 _MAX_DIM = 4096
-
-#: feature-hash prefix length (8 hex chars = 32 bits — exact in BIGINT
-#: on both engines)
-_HEX = 8
 
 #: weights are stored biased by this offset in a fixed-width hex string
 #: (6 hex chars per bucket), so the model is ONE string constant in the
@@ -59,17 +57,6 @@ def _weight_table(weights: list[int]) -> str:
             raise ValueError(
                 f"|weight| must be < {_W_OFF} milli, got {x}")
     return "".join(format(x + _W_OFF, f"0{_W_HEX}x") for x in weights)
-
-
-def bucket_of(feature: str, dim: int) -> int:
-    """Python twin of the bucket function — for fixtures and tests."""
-    return int(hashlib.md5(feature.encode("utf-8")).hexdigest()[:_HEX],
-               16) % dim
-
-
-def _bucket(col: Column, dim: int) -> Column:
-    return (F.conv(F.substring(F.md5(col), 1, _HEX), 16, 10)
-            .cast("bigint") % dim).cast("int")
 
 
 def _features(text_col: str, bigrams: bool) -> Column:
@@ -118,8 +105,8 @@ def hashed_linear_score(df: DataFrame, weights_milli,
     wtab = F.lit(_weight_table(w))
 
     def lookup(t: Column) -> Column:
-        return (F.conv(F.substring(wtab, _bucket(t, dim) * _W_HEX + 1,
-                                   _W_HEX), 16, 10)
+        b = md5_bucket(F.md5(t), dim).cast("int")
+        return (F.conv(F.substring(wtab, b * _W_HEX + 1, _W_HEX), 16, 10)
                 .cast("bigint") - _W_OFF)
 
     # ONE fold builds (count, score) together; the three output columns
@@ -165,7 +152,7 @@ def linmodel_oracle_sql(table: str, id_col: str, text_col: str,
         feats = "u"
     lookup = (
         f"list_transform(f, t -> ('0x' || substr(wl, "
-        f"CAST(('0x' || substr(md5(t), 1, {_HEX}))::UBIGINT % {dim} "
+        f"CAST(('0x' || substr(md5(t), 1, {HEX32}))::UBIGINT % {dim} "
         f"AS INT) * {_W_HEX} + 1, {_W_HEX}))::BIGINT - {_W_OFF})")
     return f"""
         WITH w AS (SELECT '{_weight_table(wl)}' AS wl),
@@ -212,7 +199,8 @@ def train_hashed_linear(df: DataFrame, label_col: str,
                       _features(text_col, bigrams).alias("_f")))
     counts = (staged.select("_y", F.explode_outer("_f").alias("_t"))
               .where(F.col("_t").isNotNull())
-              .select("_y", _bucket(F.col("_t"), dim).alias("_b"))
+              .select("_y", md5_bucket(F.md5("_t"), dim).cast("int")
+                      .alias("_b"))
               .groupBy("_b")
               .agg(F.sum(F.when(F.col("_y"), 1).otherwise(0)).alias("_p"),
                    F.sum(F.when(~F.col("_y"), 1).otherwise(0)).alias("_n"))

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from .curation import mix_threshold_hex
+from ..functions.hashing import mix_key, mix_threshold_hex
 
 #: fixed-point scale for per-bigram negative log-likelihood (nano-nats).
 NANO = 1_000_000_000
@@ -215,9 +215,8 @@ def perplexity_bucket_assignments(df: DataFrame, id_col: str = "doc_id",
 
     fit = s
     if sample_frac < 1.0:
-        h = F.substring(
-            F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string"))), 1, 8)
-        fit = s.where(h < F.lit(mix_threshold_hex(sample_frac)))
+        fit = s.where(mix_key(seed, id_col)
+                      < F.lit(mix_threshold_hex(sample_frac)))
     w = Window.partitionBy("lang").orderBy("score", id_col)
     ranked = fit.select(
         "lang", "score",

@@ -25,8 +25,7 @@ Scale shape — the classic two-level sketch merge:
    per key.
 
 The raw values never shuffle; a hot key costs partitions × k rows, not
-its row count. md5 (not xxhash64) because both engines compute
-identical md5 — cross-engine determinism is the point.
+its row count. Hashes follow ``functions/hashing.py``.
 """
 
 from __future__ import annotations
@@ -35,9 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-#: hex chars of the hash used as the uniform (0,1) fraction — 48 bits,
-#: exactly representable in a double in BOTH engines
-_FRAC_HEX = 12
+from ..functions.hashing import HEX48, md5_int
 
 
 def kmv_distinct(df: DataFrame, key_col: str, value_col: str,
@@ -94,8 +91,8 @@ def _kmv_estimate(n, kth, k):
     """(k-1)/frac(kth-hash) estimator as a Column — exact below k.
     Shared by the per-key sketch above and the set-algebra below so the
     fraction convention can never drift."""
-    frac = (F.conv(F.substring(kth, 1, _FRAC_HEX), 16, 10).cast("double")
-            / F.lit(float(16 ** _FRAC_HEX)))
+    frac = (md5_int(kth, HEX48).cast("double")
+            / F.lit(float(16 ** HEX48)))
     est = F.when(n < k, n.cast("double")).otherwise(F.lit(k - 1) / frac)
     return F.floor(est).cast("bigint")
 

@@ -24,18 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: hex chars of each md5 draw — 48 bits, exact in BIGINT math
-_HEX = 12
+from ..functions.hashing import HEX48, md5_bucket, seeded_md5
 
 PRE_TOK, SUF_TOK, MID_TOK = "<PRE>", "<SUF>", "<MID>"
-
-
-def _draw(salt: str, id_col, mod):
-    """Uniform integer in [0, mod) from md5(salt ‖ id) — the engine's
-    shared seeded-randomness idiom (cross-engine deterministic)."""
-    h = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    return F.pmod(
-        F.conv(F.substring(h, 1, _HEX), 16, 10).cast("bigint"), mod)
 
 
 def fim_transform(df: DataFrame, id_col: str = "doc_id",
@@ -54,10 +45,12 @@ def fim_transform(df: DataFrame, id_col: str = "doc_id",
         raise ValueError(f"min_chars must be >= 3: {min_chars}")
     t = F.col(text_col)
     L = F.length(t)
-    selected = (_draw("fim:", id_col, F.lit(100)) < F.lit(int(rate_pct)))
+    span = (L - 1).cast("bigint")
+    selected = (md5_bucket(seeded_md5("fim:", id_col), F.lit(100), HEX48)
+                < F.lit(int(rate_pct)))
     eligible = t.isNotNull() & (L >= int(min_chars))
-    a = F.lit(1) + _draw("fim1:", id_col, (L - 1).cast("bigint"))
-    b = F.lit(1) + _draw("fim2:", id_col, (L - 1).cast("bigint"))
+    a = F.lit(1) + md5_bucket(seeded_md5("fim1:", id_col), span, HEX48)
+    b = F.lit(1) + md5_bucket(seeded_md5("fim2:", id_col), span, HEX48)
     p1, p2 = F.least(a, b), F.greatest(a, b)
     rewritten = F.concat(
         F.lit(PRE_TOK), F.substring(t, 1, p1.cast("int")),
@@ -109,11 +102,9 @@ def span_corruption(df: DataFrame, id_col: str = "doc_id",
     n = F.size("_t")
 
     def seed(i):
-        h = F.md5(F.concat(F.lit("sc:"), F.col(id_col).cast("string"),
-                           F.lit(":"), i.cast("string")))
-        return F.pmod(
-            F.conv(F.substring(h, 1, 12), 16, 10).cast("bigint"),
-            F.lit(100)) < F.lit(int(seed_pct))
+        h = seeded_md5("sc:", F.concat(F.col(id_col).cast("string"),
+                                       F.lit(":"), i.cast("string")))
+        return md5_bucket(h, F.lit(100), HEX48) < F.lit(int(seed_pct))
 
     idx = F.sequence(F.lit(1), n)
     # masked[i] ⇔ a seed fired at i, i-1, or i-2 (span length 3)

@@ -462,6 +462,18 @@ def test_drop_exact_duplicates_keep_by_quality(spark):
                      drop_exact_duplicates(df).collect())
     assert default == [1, 4]
 
+def test_drop_exact_duplicates_keep_by_null_score_ranks_last(spark):
+    """A NULL score ranks after every scored clone; a group with no
+    score at all keeps its min id."""
+    df = spark.createDataFrame(
+        [(1, "same body", None), (2, "same body", 0.1),
+         (3, "other body", None), (4, "other body", None)],
+        "doc_id bigint, text string, q double")
+    kept = sorted(r["doc_id"] for r in
+                  drop_exact_duplicates(df, keep_by="q").collect())
+    assert kept == [2, 3]
+
+
 def test_drop_exact_duplicates_keep_by_string_ids(spark):
     """keep_by must work when the id column is a STRING (urls): the
     tiebreak negates the numeric score, never the id — a negated string

@@ -94,6 +94,89 @@ def test_drop_near_duplicates_keep_by(spark):
     assert default == {1, 3}
 
 
+def test_drop_near_duplicates_keep_by_null_score_ranks_last(spark):
+    """A cluster member with a NULL score never beats a scored one: an
+    unscored page has no quality evidence. An all-NULL cluster keeps
+    its min id."""
+    from document_extractor_spark.operators.dedup import (
+        drop_near_duplicates)
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    other = "one two three four five six seven eight nine ten"
+    rows = [
+        (1, base, None),
+        (2, base + " tail", 5),
+        (3, other, None),
+        (4, other + " tail", None),
+    ]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string, q int")
+    kept = {r["doc_id"] for r in drop_near_duplicates(
+        df, threshold=0.5, keep_by="q").collect()}
+    assert kept == {2, 3}
+
+
+def _tokens_doc(prefix, n=200):
+    return " ".join(f"{prefix}{i}" for i in range(n))
+
+
+def test_minhash_signature_components_are_independent(spark):
+    """Each of the k components is its own salted min-hash; a 200-token
+    doc has (almost surely) k distinct components, not one value."""
+    from document_extractor_spark.operators.dedup import (
+        minhash_signatures)
+
+    df = spark.createDataFrame([(1, _tokens_doc("w"))],
+                               "doc_id bigint, text string")
+    sig = minhash_signatures(df, k=32).collect()[0]["sig"]
+    assert len(sig) == 32
+    assert len(set(sig)) > 1
+
+
+def test_minhash_finds_prefix_shifted_clone(spark):
+    """Two 200-token docs differing only by a one-token prefix share
+    198 of 199 shingles (Jaccard ≈ 0.995): LSH must make them a
+    candidate pair and verification must keep it."""
+    from document_extractor_spark.operators.dedup import (
+        minhash_near_duplicates,
+        minhash_signatures,
+    )
+
+    body = _tokens_doc("w")
+    df = spark.createDataFrame([(1, body), (2, "lead " + body)],
+                               "doc_id bigint, text string")
+    sigs = {r["doc_id"]: r["sig"]
+            for r in minhash_signatures(df, k=32).collect()}
+    shared = sum(a == b for a, b in zip(sigs[1], sigs[2]))
+    assert shared >= 24
+    pairs = [(r["id_a"], r["id_b"])
+             for r in minhash_near_duplicates(df, threshold=0.8).collect()]
+    assert pairs == [(1, 2)]
+
+
+def test_blank_docs_make_no_hot_lsh_bucket(spark):
+    """NULL, empty and whitespace-only docs have no token, so they get
+    no signature and no band rows; before, they all shared one
+    signature and piled into one bucket per band. Blank and short new
+    docs still survive the ingest gate (no evidence → kept)."""
+    blanks = ["", None, "   ", "\n\t "]
+    rows = ([(i, blanks[i % len(blanks)]) for i in range(200)]
+            + [(1000 + i, f"s{i} t{i}") for i in range(50)]
+            + [(2000 + i, _tokens_doc(f"d{i}_", 20)) for i in range(5)])
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    idx = minhash_index(df)
+    biggest = (idx.groupBy("band", "band_hash").count()
+               .agg(F.max("count")).collect()[0][0])
+    assert biggest <= 2
+    assert idx.select("id").distinct().count() == 55
+
+    new = spark.createDataFrame(
+        [(5000, ""), (5001, None), (5002, "   "), (5003, "fresh short")],
+        "doc_id bigint, text string")
+    got = {r["id"]: (r["best_match_id"], r["keep"])
+           for r in ingest_near_dups(new, idx).collect()}
+    assert got == {i: (None, True) for i in (5000, 5001, 5002, 5003)}
+
+
 # ---------------------------------------------------------------------------
 # mirror_families
 # ---------------------------------------------------------------------------

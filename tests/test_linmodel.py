@@ -66,14 +66,15 @@ def test_unigram_only_ignores_order(spark):
 
 
 def test_bucket_function_cross_engine(spark):
-    """Spark's conv-bridge bucket == the Python md5 twin."""
+    """Spark's conv-bridge bucket (the one the model scores and trains
+    with, functions/hashing.md5_bucket) == the Python md5 twin."""
     toks = ["fast", "slow", "naïve", "a_b", ""]
     df = spark.createDataFrame([(t,) for t in toks], "t string")
-    from document_extractor_spark.operators.linmodel import _bucket
+    from document_extractor_spark.functions.hashing import md5_bucket
 
+    b = md5_bucket(F.md5("t"), 512).cast("int")
     got = {r["t"]: r["b"]
-           for r in df.select("t", _bucket(F.col("t"), 512).alias("b"))
-           .collect()}
+           for r in df.select("t", b.alias("b")).collect()}
     for t in toks:
         assert got[t] == int(
             hashlib.md5(t.encode()).hexdigest()[:8], 16) % 512, t
